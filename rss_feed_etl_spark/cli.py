@@ -118,6 +118,13 @@ def run_filter_from_config(
     )
     if not filt.add_as_of_dt:
         result = result.drop("AS_OF_DT")
+    if not dry_run:
+        # Materialize before writing: append mode reads its own previous
+        # output (plain parquet has no atomic read-then-overwrite).
+        # localCheckpoint, not cache: cached blocks are evictable and
+        # recompute would re-read files the overwrite has already deleted.
+        # Counting the checkpoint, not the plan, runs the filter plan once.
+        result = result.localCheckpoint(eager=True)
     n_out = result.count()
     summary = {
         "step": "filter",
@@ -127,11 +134,6 @@ def run_filter_from_config(
     }
     if dry_run:
         return summary
-    # Materialize before writing: append mode reads its own previous output
-    # (plain parquet has no atomic read-then-overwrite).  localCheckpoint,
-    # not cache: cached blocks are evictable and recompute would re-read
-    # files the overwrite has already deleted.
-    result = result.localCheckpoint(eager=True)
     if stor.partition_output and existing is not None:
         # append under append grows the output without bound — rewrite only
         # the date partitions the new batch touched (M4 scale path), exactly

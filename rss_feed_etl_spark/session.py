@@ -10,7 +10,12 @@ engines (the DuckDB oracle is UTC-naive).
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import functools
 import os
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -88,6 +93,32 @@ def get_spark(
 _PYFILES_ADDED: set[int] = set()
 
 
+@functools.cache
+def _package_zip() -> str:
+    """Zip this package's sources into a fresh temp file, once per process.
+
+    The name comes from ``mkstemp``, never from the pid: a later process
+    that gets the same pid (common in containers) would otherwise find an
+    old zip at that path and ship an older copy of the package.
+    """
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    fd, zip_path = tempfile.mkstemp(prefix="rss_feed_etl_spark-", suffix=".zip")
+    atexit.register(_remove_if_present, zip_path)
+    with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if not fn.endswith(".py"):
+                    continue
+                full = os.path.join(root, fn)
+                zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+    return zip_path
+
+
+def _remove_if_present(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
+
+
 def ensure_executors_can_import(spark: SparkSession) -> None:
     """Ship this package to executors via addPyFile.
 
@@ -99,27 +130,10 @@ def ensure_executors_can_import(spark: SparkSession) -> None:
     operators location-independent (works on driver-provided sessions too,
     since addPyFile is a runtime call).
     """
-    import os
-    import tempfile
-    import zipfile
-
     key = id(spark.sparkContext)
     if key in _PYFILES_ADDED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"rss_feed_etl_spark-{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip())
     _PYFILES_ADDED.add(key)
 
 

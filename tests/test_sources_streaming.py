@@ -18,7 +18,13 @@ from rss_feed_etl_spark.operators.multimodal import (
 from rss_feed_etl_spark.plans.enrichment_pipeline import run_enrichment
 from rss_feed_etl_spark.plans.etl_pipeline import run_etl
 from rss_feed_etl_spark.schemas import STAGE_SCHEMA
-from rss_feed_etl_spark.sources.rss import parse_feed_xml, read_feeders
+from rss_feed_etl_spark.sources.rss import (
+    RAW_ENTRY_SCHEMA,
+    clean_entries,
+    fetch_feeds,
+    parse_feed_xml,
+    read_feeders,
+)
 from rss_feed_etl_spark.streaming.incremental import (
     incremental_scd1,
     read_stage_stream,
@@ -107,6 +113,47 @@ def test_etl_pipeline_end_to_end(spark, config_df):
     assert rows["http://x/2"]["published"] == dt.datetime(2024, 5, 22)
     # RFC-822 date parsed
     assert rows["http://x/1"]["published"] == dt.datetime(2024, 5, 20, 10, 0)
+
+
+def test_rss_source_is_one_python_pass_per_core(spark, config_df):
+    """Fetch, parse and HTML clean run in ONE Python stage whose task count
+    follows the session's parallelism: no second Python stage for the
+    summary clean and no shuffle ahead of the fetch."""
+    batch = clean_entries(
+        fetch_feeds(spark, read_feeders(config_df), make_stub_fetcher()),
+        now="2024-05-22 00:00:00",
+    )
+    qe = batch._jdf.queryExecution()
+    logical = qe.optimizedPlan().toString()
+    assert sum("MapInPandas" in line for line in logical.splitlines()) == 1
+    assert "ArrowEvalPython" not in logical
+    assert "BatchEvalPython" not in logical
+    assert "Exchange" not in qe.executedPlan().toString()
+    assert batch.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+
+
+def test_fetch_feeds_with_no_feeders_is_empty_and_keeps_history(spark):
+    blank = spark.createDataFrame(
+        [("Blank", "rss.app", "15min", " ", "StageData", "")],
+        "title string, reader string, time string, url string, worksheet_name string, job_title string",
+    )
+    assert read_feeders(blank) == []
+    raw = fetch_feeds(spark, [], make_stub_fetcher())
+    assert raw.schema == RAW_ENTRY_SCHEMA
+    assert raw.count() == 0
+    history = spark.createDataFrame(
+        [
+            ("Old", "http://x/1", "Data Engineer", dt.datetime(2024, 5, 1), "Jobs Feed", "r", "t", "s1", "keep-me"),
+            ("Old", "http://x/9", "Analyst", dt.datetime(2024, 5, 2), "Jobs Feed", "r", "t", "s2", ""),
+        ],
+        STAGE_SCHEMA,
+    )
+    out = run_etl(
+        spark, blank, history, fetcher=make_stub_fetcher(), strategy="scd1",
+        now="2024-05-22 00:00:00",
+    )
+    assert sorted(out.dtypes) == sorted(history.dtypes)
+    assert sorted(out.select(*history.columns).collect()) == sorted(history.collect())
 
 
 def test_streaming_incremental_scd1(spark, tmp_path):
